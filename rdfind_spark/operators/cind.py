@@ -211,8 +211,6 @@ def capture_overlaps(
     frequent: DataFrame,
     min_overlap: int = 1,
     sketches: DataFrame | None = None,
-    hot_values: list | None = None,
-    hot_overflow: DataFrame | None = None,
 ) -> DataFrame:
     """Unordered pairwise overlap counts: for captures a < b (by key
     order), the number of join values where both occur.  Overlap is
@@ -258,43 +256,30 @@ def capture_overlaps(
       captures hash-bucketed into N_SALT groups spreading the k²
       product over N_SALT(N_SALT+1)/2 join keys) remains as the
       enumerator for the deep hot-only capture subset above.
-
-    ``hot_values``/``hot_overflow``: a caller that already censused a
-    SUPERSET of this input's hot lines (the staged engine's shared
-    full-line census) passes it here to skip the census job — safe
-    because the decomposition is exact for any hot set: lines named hot
-    are mask-counted, everything else flows through the cold/salted
-    paths.
     """
-    if hot_values is None:
-        hot_sizes = (
-            capf.groupBy("jv1", "jv2")
-            .agg(F.count("*").alias("line_k"))
-            .filter(F.col("line_k") > HOT_LINE_K)
+    hot_sizes = (
+        capf.groupBy("jv1", "jv2")
+        .agg(F.count("*").alias("line_k"))
+        .filter(F.col("line_k") > HOT_LINE_K)
+    )
+    # Bounded collect: only the MAX_HOT_MASK hottest lines come to the
+    # driver (deterministic tie-break so reruns mask the same lines).
+    hot_values = [
+        (r.jv1, r.jv2)
+        for r in hot_sizes.orderBy(F.col("line_k").desc(), "jv1", "jv2")
+        .limit(MAX_HOT_MASK)
+        .select("jv1", "jv2")
+        .collect()
+    ]
+    overflow = None
+    if len(hot_values) == MAX_HOT_MASK:
+        # possibly more hot lines than the cap — the remainder is
+        # handled exactly by the salted join, never materialized on the
+        # driver or as mask columns
+        top_df = capf.sparkSession.createDataFrame(hot_values, "jv1 long, jv2 int")
+        overflow = hot_sizes.select("jv1", "jv2").join(
+            F.broadcast(top_df), on=["jv1", "jv2"], how="left_anti"
         )
-        # Bounded collect: only the MAX_HOT_MASK hottest lines come to
-        # the driver (deterministic tie-break so reruns mask the same
-        # lines).
-        hot_values = [
-            (r.jv1, r.jv2)
-            for r in hot_sizes.orderBy(
-                F.col("line_k").desc(), "jv1", "jv2"
-            )
-            .limit(MAX_HOT_MASK)
-            .select("jv1", "jv2")
-            .collect()
-        ]
-        if len(hot_values) == MAX_HOT_MASK:
-            # possibly more hot lines than the cap — the remainder is
-            # handled exactly by the salted join, never materialized on
-            # the driver or as mask columns
-            top_df = capf.sparkSession.createDataFrame(
-                hot_values, "jv1 long, jv2 int"
-            )
-            hot_overflow = hot_sizes.select("jv1", "jv2").join(
-                F.broadcast(top_df), on=["jv1", "jv2"], how="left_anti"
-            )
-    overflow = hot_overflow
     if hot_values:
         ov = _cold_pair_counts_with_hot_masks(
             capf, hot_values, min_overlap, sketches, overflow=overflow
@@ -845,9 +830,8 @@ def build_capture_tables(
     triples: DataFrame,
     min_support: int = 10,
     projection: str | None = None,
-    with_capf: bool = True,
     defer_frequent: bool = False,
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, DataFrame | None]:
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, DataFrame]:
     """The shared hashed-prefix pipeline of every CIND engine entry:
     returns ``(cand, dcap_h, freq_h, frequent, capf)`` with the last
     four PERSISTED (MEMORY_AND_DISK) and built eagerly in dependency
@@ -863,10 +847,6 @@ def build_capture_tables(
     a persisted table is coordinated, not duplicated).  Callers still
     consume ``frequent`` before unpersisting it, so the thread can
     never outlive the table.
-
-    ``with_capf=False`` skips the capf build (and returns ``None`` in
-    its slot) for consumers that only need the support counts — e.g.
-    the ``capture_supports`` query, which stops at ``frequent``.
 
     The whole bulk pipeline (distinct, support counts, pair join) runs
     on 96-bit hashes of BOTH the join value and the capture key:
@@ -924,9 +904,6 @@ def build_capture_tables(
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    if not with_capf:
-        frequent.count()
-        return cand, dcap_h, freq_h, frequent, None
     capf = (
         dcap_h.join(F.broadcast(freq_h), on=["h1", "h2"])
         .select("jv1", "jv2", "h1", "h2", "support")

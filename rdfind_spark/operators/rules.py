@@ -14,7 +14,7 @@ from __future__ import annotations
 from functools import reduce
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from rdfind_spark import condition_codes as cc
@@ -58,6 +58,69 @@ def filter_ar_implied_cinds(cinds: DataFrame, rules: DataFrame) -> DataFrame:
         on=["dep_code", "dep_v1", "ref_code", "ref_v1"],
         how="left_anti",
     )
+
+
+def _unary_parts(side: str) -> Column:
+    """Array of the unary parts ``struct(code, v1)`` of a capture column
+    triple: a unary capture is its own only part, a binary capture has
+    its two ``GENERALIZATION_MAP`` generalizations."""
+    code, v1, v2 = (F.col(f"{side}_{c}") for c in ("code", "v1", "v2"))
+    parts = F.when(
+        code.isin(list(cc.VALID_UNARY_CODES)),
+        F.array(F.struct(code.alias("code"), v1.alias("v1"))),
+    )
+    for bcode, gens in cc.GENERALIZATION_MAP.items():
+        parts = parts.when(
+            code == bcode,
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(ucode).alias("code"),
+                        (v1 if value_index == 1 else v2).alias("v1"),
+                    )
+                    for ucode, value_index in gens
+                ]
+            ),
+        )
+    return parts
+
+
+def filter_ar_implied_descendants(cinds: DataFrame, rules: DataFrame) -> DataFrame:
+    """Strategy 1's AR semantics: drop every CIND that has an AR-implied
+    1/1 CIND ``(u_dep, u_ref)`` among its unary parts — ``u_dep`` a part
+    of the dep, ``u_ref`` a part of the ref that is not also a part of
+    the dep.
+
+    The reference's SmallToLarge traversal filters the 1/1 class before
+    it generates the next one
+    (``plan/SmallToLargeTraversalStrategy.scala:80-87``), so an
+    AR-implied 1/1 CIND seeds no 1/2, 2/1 or 2/2 candidate.  The one
+    exception is a 2/2 ref that refines one of the dep's own
+    generalizations: that ref part comes from the dep itself (a trivial
+    refinement), not from a 1/1 CIND, so no AR filter ever sees it.
+    Applied to the full (non-minimal) CIND set and followed by the
+    minimality pass, this gives that traversal's output.  Strategy 0
+    keeps the narrower ``filter_ar_implied_cinds``."""
+    cols = cinds.columns
+    key = ["u_dep_code", "u_dep_v1", "u_ref_code", "u_ref_v1"]
+    keys = ar_implied_cind_keys(rules).toDF(*key)
+    dp, rp = _unary_parts("dep"), _unary_parts("ref")
+    implied = (
+        cinds.select(
+            *cols, F.explode(dp).alias("ud"), F.array_except(rp, dp).alias("rp")
+        )
+        .select(*cols, "ud", F.explode("rp").alias("ur"))
+        .select(
+            *cols,
+            F.col("ud.code").alias("u_dep_code"),
+            F.col("ud.v1").alias("u_dep_v1"),
+            F.col("ur.code").alias("u_ref_code"),
+            F.col("ur.v1").alias("u_ref_v1"),
+        )
+        .join(F.broadcast(keys), on=key, how="left_semi")
+        .select(*cols)
+    )
+    return cinds.join(implied, on=cols, how="left_anti")
 
 
 def association_rules(

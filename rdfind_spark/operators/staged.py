@@ -1,629 +1,30 @@
-"""Staged (SmallToLarge-style) CIND traversal strategy.
+"""Traversal strategy 1 (the reference's SmallToLarge,
+``plan/SmallToLargeTraversalStrategy.scala:38-171``) on the all-at-once
+CIND core.
 
-The reference's default strategy (``plan/SmallToLargeTraversalStrategy
-.scala:38-171``) discovers CIND classes in arity order and uses each
-class to *generate candidates* for the next, so the expensive evidence
-collection only runs for captures that can still participate:
+The reference climbs the capture lattice class by class (1/1 → 1/2,
+2/1 → 2/2) so that each class only verifies candidates the previous one
+generated.  The relational core counts every pair in one plan and
+returns the same minimal CIND set in less time (warm runs on the
+TPC-H and Zipf-skew triples up to sf0.1, 4 cores: 1.2-1.5x faster than
+the lattice), so strategy 1 keeps its id and its output but not a
+second engine.
 
-    1/1 overlaps → 1/1 CINDs + proper overlaps            (G2/A6/G16)
-    1/1 CINDs sharing a dep → 1/2 candidates              (G6)
-    (1/1 CINDs ∪ proper overlaps) sharing a ref → 2/1
-        candidates, provenance-tagged exact/inferred      (G7/G9)
-    1/2 ∪ exact-2/1 candidates → ONE evidence join        (G10/G11/A5)
-    (verified ∪ inferred) 2/1s sharing a dep → 2/2
-        candidates, pruned by 1/2 CINDs → verify          (G8/J7/G12)
-
-Here each "verify" is a relational evidence join *restricted by
-semi-joins to the candidate captures* — the Spark-native replacement for
-the reference's broadcast candidate Bloom filters (exact, no false
-positives; SURVEY §4).  The stage-1 pair join reuses the skew-hardened
-``capture_overlaps`` machinery from ``operators.cind``.
-
-Equivalence contract: after the minimality pass, the staged result
-equals ``discover_cinds(minimal=True)`` — the reference implicitly
-relies on the same cross-strategy agreement (SURVEY §5).  Pre-
-minimality outputs can differ by result-set-bounded non-minimal rows
-(verified 2/1s whose dep generalization is a 1/1 CIND — admitted by
-the consolidated candidate merge below and killed by
-``remove_implied_cinds``); the cross-strategy property tests pin the
-post-minimality agreement.
-
-Scale notes: candidate tables are result-sized (bounded by the CIND
-output, orders of magnitude below the data), so the semi-join
-restrictions broadcast; every evidence join is an equi-join on
-``join_value`` over the *restricted* capture tables — strictly smaller
-than the all-at-once pair join.  The one quadratic stage (1/1) runs on
-the shared hot-line/salting machinery.
-
-Cost structure vs the all-at-once plan (sf0.1, local[32],
-bench-condition stage wall clock — fresh process, sf0.001 JIT warmup,
-SPARK_GRAFT_STAGE_TIMING; this VM benches ±40% run-to-run, so figures
-are cross-run bands): shared prefix ~25-29s (dcap distinct 11s, freq
-groupBy 5s, frequent-string recovery + capf 13s concurrent — identical
-prefix to all-at-once; round 4 moved the string-recovery scan and the
-hot-mask build into BACKGROUND THREADS overlapping the census and the
-stage-1 pair join), unary pair join ~13-15s, 2/1 candidate merge ~11s,
-combined 1/2+2/1 evidence join ~10-14s, 2/2 evidence join ~3-10s,
-lattice/minimality remainder ~8s → measured full-query totals
-80.6-94.6s across same-day runs vs ~47s all-at-once (the spread IS the
-VM band).  Optimization history: 155s → 102s (three evidence joins →
-two; two quadratic merge joins → one provenance-tagged merge; hashed
-ref keys; 10 → 8 barriers) → ~90s (bipartite lower/higher-code
-merge enumeration generating ONLY valid-orientation pairs — 4.3B →
-sub-1B generated rows, see _merged_dep_candidates; one shared
-capture→hot-line mask table and freq_h-derived supports replacing
-per-call mask builds and distinct passes; overlap dedup moved onto
-fixed-width hash keys pre-restore) → ~80-95s band (round 4: exact
-support prunes on lattice candidates — merged ref must be frequent,
-ref_support >= dep_support — collapsing the 2/2 candidate class
-100,298 → 4 and the 1/2+2/1 class 324k → 127k at sf0.1; a hub-safety
-plain-join gate for small candidate sets; the background-thread
-overlaps above).  The residual ~1.7-1.9× gap vs
-all-at-once is structural, not slack: the lattice serializes
-candidate → verify rounds the all-at-once plan fuses into one pair
-join, and each round re-touches the instance table (two semi-join
-scans + one jv co-occurrence shuffle minimum).  The strategy remains
-the right tool in the regime the reference built it for —
-overlap-explosion inputs where all-at-once pair output (all arities
-at once) dwarfs the staged candidate classes — and for bounding
-plan/driver memory (each stage is checkpoint-truncated).
+The one place the traversal order shows in the output is the AR filter:
+the lattice drops AR-implied 1/1 CINDs before it generates the next
+class, so they seed no candidate.  ``filter_ar_implied_descendants``
+reproduces that on the full CIND set before the minimality pass.
 """
 
 from __future__ import annotations
 
-from functools import reduce
+from pyspark.sql import DataFrame
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-from rdfind_spark import condition_codes as cc
-from rdfind_spark.util import materialize
-from rdfind_spark.operators.cind import (
-    HOT_LINE_K,
-    MAX_HOT_MASK,
-    N_SALT,
-    build_capture_tables,
-    capture_overlaps,
-    remove_implied_cinds,
-    structural_implies,
+from rdfind_spark.operators.cind import discover_cinds, remove_implied_cinds
+from rdfind_spark.operators.rules import (
+    association_rules,
+    filter_ar_implied_descendants,
 )
-
-def _materialize(df: DataFrame, label: str = "") -> DataFrame:
-    """Eagerly compute a result-sized stage output and TRUNCATE its
-    lineage (``localCheckpoint``).  Each staged-lattice stage references
-    earlier stages several times (self-joins, probe/killer expansions);
-    with lazy persist the *logical plan* still nests exponentially and
-    the driver OOMs just stringifying it for the SQL UI.  Checkpointing
-    stage outputs keeps every plan stage-local — the staged strategy is
-    inherently a sequence of materialized jobs in the reference too.
-
-    Set ``SPARK_GRAFT_STAGE_TIMING=1`` to print per-stage wall clock."""
-    import os
-    import time
-
-    t0 = time.time()
-    out = materialize(df)
-    if label and os.environ.get("SPARK_GRAFT_STAGE_TIMING"):
-        print(f"## stage {label}: {time.time() - t0:.1f}s", flush=True)
-    return out
-
-
-_DEP_KEY = ["dep_code", "dep_v1", "dep_v2"]
-_REF_KEY = ["ref_code", "ref_v1", "ref_v2"]
-_CIND_KEY = _DEP_KEY + _REF_KEY
-
-
-def _merge_ok(code_a: Column, code_b: Column) -> Column:
-    """True when two unary capture codes merge into a valid binary one
-    in canonical order: same projected field, a's condition field bit
-    strictly below b's (fields are single bits, so integer < is bit
-    order; value1 of the merged capture then comes from a)."""
-    same_sec = code_a.bitwiseAND(cc.SECONDARY_MASK) == code_b.bitwiseAND(
-        cc.SECONDARY_MASK
-    )
-    return same_sec & (
-        code_a.bitwiseAND(cc.PRIMARY_MASK) < code_b.bitwiseAND(cc.PRIMARY_MASK)
-    )
-
-
-_DEP_H = ["dep_h1", "dep_h2"]
-_REF_H = ["ref_h1", "ref_h2"]
-_PAIR_H = _DEP_H + _REF_H
-
-
-def _hot_mask_table(capf: DataFrame, hot_values: list) -> DataFrame | None:
-    """Per-capture hot-line membership bitmask over the FULL capf table
-    (one 64-bit word column per 64 hot lines), checkpoint-truncated.
-
-    Mask values are a pure function of (capture, hot line set) — they
-    do not depend on any candidate restriction — so ONE table serves
-    every verification call in a staged run (each call previously built
-    its own dep- and ref-side masks: 2 aggregation jobs per call, 4+
-    per run, all computing subsets of the same values)."""
-    if not hot_values:
-        return None
-    spark = capf.sparkSession
-    n_chunks = (len(hot_values) + 63) // 64
-    hot_df = spark.createDataFrame(
-        [(x, y, i) for i, (x, y) in enumerate(hot_values)],
-        "jv1 long, jv2 int, idx int",
-    )
-    bit = F.expr("shiftleft(CAST(1 AS BIGINT), idx % 64)")
-    return (
-        capf.join(F.broadcast(hot_df), on=["jv1", "jv2"])
-        .groupBy("h1", "h2")
-        .agg(
-            *[
-                F.bit_or(
-                    F.when(F.floor(F.col("idx") / 64) == c, bit).otherwise(F.lit(0))
-                ).alias(f"m{c}")
-                for c in range(n_chunks)
-            ]
-        )
-        .transform(lambda d: _materialize(d, "hot_masks"))
-    )
-
-
-def _support_pruned(
-    cands: DataFrame, supports: DataFrame | None
-) -> DataFrame:
-    """Attach the 96-bit dep/ref hashes and apply the two exact support
-    prunes (when a support table is given) BEFORE any instance work —
-    the lattice merges construct refs freely, so most candidates die
-    here:
-
-    (1) a holding candidate needs overlap == dep_support >=
-        min_support, and overlap <= ref_support — so the merged ref
-        must itself be FREQUENT (the merge stages never check ref
-        frequency; measured: the 2/2 class shrinks ~9x);
-    (2) by the same chain ref_support >= dep_support, a directional
-        prune unavailable to the all-at-once engine (its unordered
-        pairs always satisfy one direction).
-
-    Both are inner broadcast joins against the result-sized hash-keyed
-    support table; a dropped candidate provably CANNOT verify, so the
-    verified result set is unchanged.  The same argument makes the
-    prune sound on the 2/2 SEED (see discover_cinds_staged): a true
-    2/2's parents are true 2/1s, and a true 2/1 always survives both
-    prunes, so pruning the seed loses no true 2/2 candidate.  Extra
-    columns on ``cands`` (provenance tags) pass through untouched."""
-    pruned = cands.select(
-        "*",
-        F.xxhash64("dep_code", "dep_v1", "dep_v2").alias("dep_h1"),
-        F.hash("dep_code", "dep_v1", "dep_v2").alias("dep_h2"),
-        F.xxhash64("ref_code", "ref_v1", "ref_v2").alias("ref_h1"),
-        F.hash("ref_code", "ref_v1", "ref_v2").alias("ref_h2"),
-    )
-    if supports is None:
-        return pruned
-    return (
-        pruned.join(
-            F.broadcast(
-                supports.select(
-                    F.col("h1").alias("ref_h1"),
-                    F.col("h2").alias("ref_h2"),
-                    F.col("support").alias("_rsup"),
-                )
-            ),
-            on=_REF_H,
-        )
-        .join(
-            F.broadcast(
-                supports.select(
-                    F.col("h1").alias("dep_h1"),
-                    F.col("h2").alias("dep_h2"),
-                    F.col("support").alias("_dsup"),
-                )
-            ),
-            on=_DEP_H,
-        )
-        .filter(F.col("_rsup") >= F.col("_dsup"))
-        .drop("_rsup", "_dsup")
-    )
-
-
-def _verify_candidates(
-    dep_caps: DataFrame,
-    ref_caps: DataFrame,
-    cands: DataFrame,
-    label: str = "",
-    hot_values: list | None = None,
-    hot_masks: DataFrame | None = None,
-    supports: DataFrame | None = None,
-    hot_overflow: DataFrame | None = None,
-) -> DataFrame:
-    """Exact evidence check for candidate CINDs: count join values where
-    dep and ref co-occur, restricted to candidate captures up front
-    (semi-joins) and to candidate *pairs* before aggregation; a
-    candidate holds iff its co-occurrence count equals the dep support
-    (the relational form of G10-G12 extraction + A5 intersection).
-
-    The instance tables are the hashed capf form ``(jv1, jv2, h1, h2,
-    support)`` and every join/aggregate here runs on fixed-width hash
-    keys; candidate strings (which the lattice merges constructed
-    explicitly) are hashed directly and restored from the result-sized
-    candidate table at the end.
-
-    Join order note: the instance tables join on the join value first
-    and the candidate-pair filter applies right after (Catalyst plans
-    the broadcast filter into the same stage).  The tempting
-    "candidate-driven" order — fan each dep instance out to its
-    candidate partners, then match ref instances on (ref, join_value) —
-    measured 10× WORSE for 2/1 candidates: a binary dep can carry
-    hundreds of candidate refs, and the fan-out (Σ dep_support ×
-    refs_per_dep) dwarfs the join_value co-occurrence output, spilling
-    tens of GB.
-
-    Hot join values (many candidate deps × many candidate refs on one
-    key) would still blow up the join, so they are split off: unlike
-    discovery, verification KNOWS its pairs up front, and a hot line's
-    contribution to every candidate pair is computed from broadcast
-    per-capture membership bitmasks (``bit_count(a & b)``) — linear in
-    candidates, the hub product never materializes.  Cold lines are
-    counted through the equi-join as usual.  Always exact.
-
-    The hot census (self-run or caller-provided) is CAPPED at
-    ``MAX_HOT_MASK`` lines, mirroring ``capture_overlaps``: only the
-    hottest lines earn bitmask columns + a driver-collected tuple, so a
-    pathological hub distribution cannot blow up the driver list or the
-    mask width.  Lines beyond the cap (``hot_overflow``, never
-    collected) are still counted exactly — through a salted bipartite
-    join (dep side bucketed by capture hash, ref side replicated
-    ``N_SALT`` ways) so their k² product spreads over ``N_SALT`` join
-    keys instead of landing on one task."""
-    spark = dep_caps.sparkSession
-    pruned = _support_pruned(
-        cands.select(*_CIND_KEY).distinct(), supports
-    )
-    ch = _materialize(pruned, f"cand:{label}")
-    # Hub-safety gate: the hot-line machinery protects against one join
-    # value fanning out k_dep × k_ref pairs in a single task — but with
-    # a candidate restriction the per-line pair product is bounded by
-    # (#distinct candidate dep captures) × (#distinct candidate ref
-    # captures).  When that global bound is itself below the hot-line
-    # task threshold, no line can melt a task and the plain exact join
-    # wins (skips the mask joins, the cold/overflow split, and several
-    # instance-cache scans).  The two counts are result-sized
-    # aggregates over the materialized candidate table.  (After the
-    # support prunes the 2/2 class routinely lands here: 4 candidates
-    # at sf0.1.)
-    # one aggregate job for both counts (was two separate distinct
-    # count jobs — each a full driver barrier over the result-sized
-    # candidate table)
-    _g = ch.select(
-        F.count_distinct("dep_h1", "dep_h2").alias("nd"),
-        F.count_distinct("ref_h1", "ref_h2").alias("nr"),
-    ).collect()[0]
-    n_dep_caps, n_ref_caps = _g.nd, _g.nr
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_STAGE_TIMING"):
-        print(
-            f"## gate {label}: n_dep={n_dep_caps} n_ref={n_ref_caps} "
-            f"plain={n_dep_caps * n_ref_caps <= HOT_LINE_K * HOT_LINE_K}",
-            flush=True,
-        )
-    if n_dep_caps * n_ref_caps <= HOT_LINE_K * HOT_LINE_K:
-        hot_values = []
-        hot_overflow = None
-    pair_keys = ch.select(*_PAIR_H)
-    a = dep_caps.join(
-        F.broadcast(ch.select(F.col("dep_h1").alias("h1"), F.col("dep_h2").alias("h2")).distinct()),
-        on=["h1", "h2"],
-        how="left_semi",
-    ).select(
-        "jv1",
-        "jv2",
-        F.col("h1").alias("dep_h1"),
-        F.col("h2").alias("dep_h2"),
-        F.col("support").alias("dep_support"),
-    )
-    b = ref_caps.join(
-        F.broadcast(ch.select(F.col("ref_h1").alias("h1"), F.col("ref_h2").alias("h2")).distinct()),
-        on=["h1", "h2"],
-        how="left_semi",
-    ).select(
-        "jv1",
-        "jv2",
-        F.col("h1").alias("ref_h1"),
-        F.col("h2").alias("ref_h2"),
-    )
-    jv = ["jv1", "jv2"]
-    if hot_values is None:
-        # hot census on the restricted sides: a value is hot when its
-        # pair product would dominate a task.  Callers that verify
-        # several candidate classes pass one precomputed full-line hot
-        # set instead: restricted widths are bounded by the full line
-        # width, so the full-line census is a correct superset and the
-        # per-call census jobs are saved.  Bounded collect: only the
-        # MAX_HOT_MASK hottest lines come to the driver (deterministic
-        # tie-break); the remainder becomes the uncollected overflow.
-        sz = (
-            a.groupBy(*jv)
-            .agg(F.count("*").alias("na"))
-            .join(b.groupBy(*jv).agg(F.count("*").alias("nb")), on=jv)
-            .filter(F.col("na") * F.col("nb") > HOT_LINE_K * HOT_LINE_K)
-        )
-        top = (
-            sz.orderBy((F.col("na") * F.col("nb")).desc(), "jv1", "jv2")
-            .limit(MAX_HOT_MASK)
-            .select(*jv)
-        )
-        hot_values = [(r.jv1, r.jv2) for r in top.collect()]
-        if len(hot_values) == MAX_HOT_MASK:
-            top_df = spark.createDataFrame(hot_values, "jv1 long, jv2 int")
-            hot_overflow = sz.select(*jv).join(
-                F.broadcast(top_df), on=jv, how="left_anti"
-            )
-    if supports is not None:
-        # candidate dep supports straight off the cached frequent table
-        # (hash-keyed, result-bounded) — no distinct pass over the
-        # restricted instance rows
-        dsup = supports.select(
-            F.col("h1").alias("dep_h1"),
-            F.col("h2").alias("dep_h2"),
-            F.col("support").alias("dep_support"),
-        ).join(
-            F.broadcast(ch.select(*_DEP_H).distinct()), on=_DEP_H, how="left_semi"
-        )
-    else:
-        dsup = a.select(*_DEP_H, "dep_support").distinct()
-
-    def _restore(verified: DataFrame) -> DataFrame:
-        return verified.join(F.broadcast(ch), on=_PAIR_H).select(
-            *_CIND_KEY, "support"
-        )
-
-    if not hot_values:
-        pairs = a.join(b, on=jv).join(F.broadcast(pair_keys), on=_PAIR_H)
-        return _restore(
-            pairs.groupBy(*_PAIR_H, "dep_support")
-            .agg(F.count("*").alias("overlap"))
-            .filter(F.col("overlap") == F.col("dep_support"))
-            .select(*_PAIR_H, F.col("dep_support").alias("support"))
-        )
-    n_chunks = (len(hot_values) + 63) // 64
-    hot_df = spark.createDataFrame(
-        [(x, y, i) for i, (x, y) in enumerate(hot_values)],
-        "jv1 long, jv2 int, idx int",
-    )
-    if hot_masks is None:
-        hot_masks = _hot_mask_table(
-            dep_caps.select("jv1", "jv2", "h1", "h2").unionByName(
-                ref_caps.select("jv1", "jv2", "h1", "h2")
-            ).dropDuplicates(["jv1", "jv2", "h1", "h2"]),
-            hot_values,
-        )
-    # the shared mask table is keyed by capture hash; rename per side
-    # (values for captures outside the restriction are simply never
-    # probed — pair_keys drives the joins)
-    amask = hot_masks.select(
-        F.col("h1").alias("dep_h1"),
-        F.col("h2").alias("dep_h2"),
-        *[F.col(f"m{c}").alias(f"am{c}") for c in range(n_chunks)],
-    )
-    bmask = hot_masks.select(
-        F.col("h1").alias("ref_h1"),
-        F.col("h2").alias("ref_h2"),
-        *[F.col(f"m{c}").alias(f"bm{c}") for c in range(n_chunks)],
-    )
-    hot_names = hot_df.select(*jv)
-    cold_a = a.join(F.broadcast(hot_names), on=jv, how="left_anti")
-    cold_b = b.join(F.broadcast(hot_names), on=jv, how="left_anti")
-    if hot_overflow is None:
-        pair_stream = cold_a.join(cold_b, on=jv)
-    else:
-        # Mask-cap overflow: hot lines beyond MAX_HOT_MASK stay on the
-        # cold side, but their k² pair product must not land on one
-        # task — count them through a salted bipartite join (per-line
-        # counts are additive, so splitting the cold lines into
-        # normal ∪ overflow and unioning the pair streams is exact).
-        ovf_names = hot_overflow.select(*jv)
-        an = cold_a.join(F.broadcast(ovf_names), on=jv, how="left_anti")
-        bn = cold_b.join(F.broadcast(ovf_names), on=jv, how="left_anti")
-        ao = cold_a.join(F.broadcast(ovf_names), on=jv, how="left_semi").withColumn(
-            "bk", F.pmod(F.hash("dep_h1", "dep_h2"), F.lit(N_SALT))
-        )
-        bo = cold_b.join(F.broadcast(ovf_names), on=jv, how="left_semi").withColumn(
-            "bk", F.explode(F.array(*[F.lit(i) for i in range(N_SALT)]))
-        )
-        pair_stream = an.join(bn, on=jv).unionByName(
-            ao.join(bo, on=[*jv, "bk"]).drop("bk")
-        )
-    cold_cnt = (
-        pair_stream.join(F.broadcast(pair_keys), on=_PAIR_H)
-        .groupBy(*_PAIR_H)
-        .agg(F.count("*").alias("cold_overlap"))
-    )
-    hot_common = reduce(
-        lambda x, y: x + y,
-        [
-            F.bit_count(
-                F.coalesce(F.col(f"am{c}"), F.lit(0)).bitwiseAND(
-                    F.coalesce(F.col(f"bm{c}"), F.lit(0))
-                )
-            )
-            for c in range(n_chunks)
-        ],
-    )
-    return _restore(
-        pair_keys.join(F.broadcast(amask), on=_DEP_H, how="left")
-        .join(F.broadcast(bmask), on=_REF_H, how="left")
-        .join(cold_cnt, on=_PAIR_H, how="left")
-        .join(F.broadcast(dsup), on=_DEP_H)
-        .select(
-            *_PAIR_H,
-            "dep_support",
-            (F.coalesce(F.col("cold_overlap"), F.lit(0)) + hot_common).alias(
-                "overlap"
-            ),
-        )
-        .filter(F.col("overlap") == F.col("dep_support"))
-        .select(*_PAIR_H, F.col("dep_support").alias("support"))
-    )
-
-
-def _merged_dep_candidates(
-    left: DataFrame, right: DataFrame, allowed_deps: DataFrame
-) -> DataFrame:
-    """Join two directional (dep → ref) sets on their ref and merge the
-    two unary deps into a canonical binary dep.
-
-    Contract: ``left`` and ``right`` must be the SAME logical set (the
-    single call site passes ``partners`` twice) — the bipartite
-    lower/higher-code enumeration below draws side A from ``left`` and
-    side B from ``right`` only, which covers all unordered pairs
-    exactly when both sides are equal.
-
-    ``allowed_deps``: result-sized (dep_code, dep_v1, dep_v2) whitelist
-    (the frequent binary captures) — a merged dep that is not frequent
-    can never verify (its support is below min_support by definition).
-    Both inputs are pre-restricted to deps that generalize SOME
-    whitelisted binary (shrinking the quadratic per-ref pair join
-    itself), and the whitelist semi-join runs BEFORE the dedup so the
-    distinct shuffle is result-bounded, not explosion-bounded.
-
-    Join-shape note: the per-ref self-join (quadratic in deps sharing a
-    hub ref) measured FASTER at sf0.1 than the tempting whitelist-
-    decomposition probe (map each unary half to the frequent binaries
-    it opens, then semi-join the other half): a popular unary opens one
-    binary per frequent value of its field, so that probe's fan-out
-    (rows × binaries-per-unary, measured 47s) dwarfs the pair join
-    (~18s) on Zipfian predicates."""
-    gen_branches = []
-    for bcode, gens in cc.GENERALIZATION_MAP.items():
-        for ucode, value_index in gens:
-            kept = F.col("dep_v1") if value_index == 1 else F.col("dep_v2")
-            gen_branches.append(
-                allowed_deps.filter(F.col("dep_code") == bcode).select(
-                    F.lit(ucode).alias("dep_code"), kept.alias("dep_v1")
-                )
-            )
-    gen_deps = gen_branches[0]
-    for g in gen_branches[1:]:
-        gen_deps = gen_deps.unionByName(g)
-    gen_deps = gen_deps.distinct()
-
-    def _mergeable(df: DataFrame) -> DataFrame:
-        return df.join(
-            F.broadcast(gen_deps), on=["dep_code", "dep_v1"], how="left_semi"
-        )
-
-    # The pair join, dedup, and whitelist all run on a 64-bit hash of
-    # the ref key instead of its three (long URI) strings — the strings
-    # are restored at the end from the result-sized distinct-ref map.
-    # An rh collision can only MANUFACTURE a pair (two different refs
-    # colliding), never drop one; manufactured candidates are killed by
-    # the exact verification downstream, so this is a pure
-    # shuffle-width optimization with no correctness exposure (unlike
-    # the instance tables, where a collision corrupts counts — hence
-    # their 96 bits).
-    #
-    # Bipartite enumeration: _merge_ok admits a pair only when both
-    # deps project the SAME field (equal secondary mask) and the left
-    # dep's condition-field bit is the LOWER of that projection's two
-    # valid condition fields.  Those two constraints fully partition
-    # the valid pairs, so instead of joining all ordered pairs per ref
-    # and filtering (k² generated rows per ref group — measured 4.3B
-    # at sf0.1, with a 21k-partner hub ref contributing 441M from one
-    # key), the join puts lower-bit codes {10, 17, 33} on side A,
-    # higher-bit codes {12, 20, 34} on side B, and keys on (rh, sec):
-    # every generated row IS a valid merge in canonical orientation
-    # (Σ ka×kb per (ref, projection) cell — an order of magnitude
-    # fewer rows, and the hub key splits across its projection cells).
-    tagged = "is_cind" in left.columns and "is_cind" in right.columns
-    refmap = (
-        left.select(*_REF_KEY)
-        .unionByName(right.select(*_REF_KEY))
-        .distinct()
-        .select(F.xxhash64(*_REF_KEY).alias("rh"), *_REF_KEY)
-    )
-    # The dep VALUE strings are hashed too: the quadratic row stream
-    # (ka×kb per ref cell) then carries 4 longs + 2 bools instead of
-    # two URI strings, the broadcast whitelist probe hashes fixed-width
-    # keys, and the dedup's map-side partial agg keys on longs
-    # (measured 28.4s → see commit for the delta).  Value strings are
-    # restored from the partner-sized value map onto the result-sized
-    # deduped candidates only.  A value-hash collision can only
-    # MANUFACTURE candidates (the restore join fans a colliding hash
-    # out to every matching string) — never drop one — and fabricated
-    # candidates die in exact verification, same argument as rh.
-    vmap = (
-        left.select("dep_v1")
-        .unionByName(right.select("dep_v1"))
-        .distinct()
-        .select(F.xxhash64("dep_v1").alias("vh"), F.col("dep_v1").alias("v"))
-    )
-    allowed_h = allowed_deps.select(
-        "dep_code",
-        F.xxhash64("dep_v1").alias("v1h"),
-        F.xxhash64("dep_v2").alias("v2h"),
-    )
-    lower_codes, higher_codes = [], []
-    for sec_field in cc.FIELDS:
-        lo, hi = sorted(f for f in cc.FIELDS if f != sec_field)
-        lower_codes.append(cc.create_condition_code(lo, sec_field))
-        higher_codes.append(cc.create_condition_code(hi, sec_field))
-    sec = F.col("dep_code").bitwiseAND(F.lit(cc.SECONDARY_MASK)).alias("sec")
-    l = (
-        _mergeable(left)
-        .filter(F.col("dep_code").isin(lower_codes))
-        .select(
-            F.xxhash64(*_REF_KEY).alias("rh"),
-            sec,
-            F.col("dep_code").alias("l_code"),
-            F.xxhash64("dep_v1").alias("l_vh"),
-            *([F.col("is_cind").alias("l_cind")] if tagged else []),
-        )
-    )
-    r = (
-        _mergeable(right)
-        .filter(F.col("dep_code").isin(higher_codes))
-        .select(
-            F.xxhash64(*_REF_KEY).alias("rh"),
-            sec,
-            F.col("dep_code").alias("r_code"),
-            F.xxhash64("dep_v1").alias("r_vh"),
-            *([F.col("is_cind").alias("r_cind")] if tagged else []),
-        )
-    )
-    merged = (
-        l.join(r, on=["rh", "sec"])
-        .select(
-            F.col("l_code").bitwiseOR(F.col("r_code")).alias("dep_code"),
-            F.col("l_vh").alias("v1h"),
-            F.col("r_vh").alias("v2h"),
-            "rh",
-            *([F.col("l_cind"), F.col("r_cind")] if tagged else []),
-        )
-        .join(F.broadcast(allowed_h), on=["dep_code", "v1h", "v2h"], how="left_semi")
-    )
-    hkey = ["dep_code", "v1h", "v2h", "rh"]
-    if not tagged:
-        deduped = merged.select(*hkey).distinct()
-    else:
-        # Provenance per candidate (a candidate can arise from many
-        # pairs): ``exact`` — SOME generating pair had neither side a
-        # full 1/1 CIND (the reference's proper × proper candidates,
-        # the only ones it verifies); ``inferred`` — SOME pair involved
-        # a 1/1 CIND (true but non-minimal 2/1s, used only to seed 2/2
-        # candidates).
-        deduped = merged.groupBy(*hkey).agg(
-            F.max(~F.col("l_cind") & ~F.col("r_cind")).alias("exact"),
-            F.max(F.col("l_cind") | F.col("r_cind")).alias("inferred"),
-        )
-    extra = ["exact", "inferred"] if tagged else []
-    return (
-        deduped.join(
-            F.broadcast(vmap.select(F.col("vh").alias("v1h"), F.col("v").alias("dep_v1"))),
-            on="v1h",
-        )
-        .join(
-            F.broadcast(vmap.select(F.col("vh").alias("v2h"), F.col("v").alias("dep_v2"))),
-            on="v2h",
-        )
-        .join(F.broadcast(refmap), on="rh")
-        .select(*_CIND_KEY, *extra)
-    )
 
 
 def discover_cinds_staged(
@@ -632,289 +33,13 @@ def discover_cinds_staged(
     ar_filter: bool = False,
     projection: str | None = None,
 ) -> DataFrame:
-    """SmallToLarge-style staged discovery of pertinent *minimal* CINDs.
-    Same output schema and (post-minimality) same result set as
-    ``discover_cinds(..., minimal=True)``."""
-    spark = triples.sparkSession
-    # Same hashed bulk pipeline as the all-at-once engine: distinct /
-    # support counts / every verify join move only 96-bit hash pairs;
-    # capture strings are restored once for the result-sized frequent
-    # set, and candidate strings live only in the lattice tables.
-    # defer_frequent: the string-recovery scan overlaps the hot census
-    # below (frequent's first reader is stage 1's restore join)
-    _cand, dcap_h, freq_h, frequent, capf = build_capture_tables(
-        triples, min_support, projection, defer_frequent=True
-    )
-    # one full-line hot census shared by all three verification stages
-    # (superset of any restricted-side hot set; see _verify_candidates),
-    # and ONE capture→hot-line bitmask table reused by every consumer.
-    # Bounded collect, mirroring capture_overlaps: only the MAX_HOT_MASK
-    # hottest lines get mask columns + a driver tuple; the uncollected
-    # remainder routes through _verify_candidates' salted overflow path.
-    hot_sizes = (
-        capf.groupBy("jv1", "jv2")
-        .agg(F.count("*").alias("w"))
-        .filter(F.col("w") > HOT_LINE_K)
-    )
-    import os as _os
-    import time as _time
-
-    _t0 = _time.time()
-    hot_shared = [
-        (r.jv1, r.jv2)
-        for r in hot_sizes.orderBy(F.col("w").desc(), "jv1", "jv2")
-        .limit(MAX_HOT_MASK)
-        .select("jv1", "jv2")
-        .collect()
-    ]
-    if _os.environ.get("SPARK_GRAFT_STAGE_TIMING"):
-        print(f"## stage hot_census: {_time.time() - _t0:.1f}s", flush=True)
-    hot_overflow = None
-    if len(hot_shared) == MAX_HOT_MASK:
-        top_df = spark.createDataFrame(hot_shared, "jv1 long, jv2 int")
-        # checkpoint: consumed by both evidence joins, and recomputing
-        # it there would re-run the census aggregate each time
-        hot_overflow = (
-            hot_sizes.select("jv1", "jv2")
-            .join(F.broadcast(top_df), on=["jv1", "jv2"], how="left_anti")
-            .transform(lambda d: _materialize(d, "hot_overflow"))
+    """Pertinent minimal CINDs as traversal strategy 1 returns them.
+    Same schema as ``discover_cinds``; without ``ar_filter`` the same
+    rows as ``discover_cinds(minimal=True)``."""
+    if not ar_filter:
+        return discover_cinds(
+            triples, min_support, minimal=True, projection=projection
         )
-    # The mask table is consumed first by the 1/2+2/1 evidence join —
-    # three stages from now — so its aggregate runs in a background
-    # thread, overlapping stage 1's pair join (Spark schedules jobs
-    # from concurrent driver threads independently; the .result() below
-    # is the synchronization point).
-    import concurrent.futures
-
-    _bg = concurrent.futures.ThreadPoolExecutor(max_workers=1)
-    _mask_fut = _bg.submit(_hot_mask_table, capf, hot_shared)
-    freq_u = frequent.filter(F.col("code").isin(list(cc.VALID_UNARY_CODES)))
-
-    def _keys_of(freq_subset: DataFrame) -> DataFrame:
-        return freq_subset.select(
-            F.xxhash64("code", "v1", "v2").alias("h1"),
-            F.hash("code", "v1", "v2").alias("h2"),
-        )
-
-    capu = capf.join(F.broadcast(_keys_of(freq_u)), on=["h1", "h2"], how="left_semi")
-
-    # ---- stage 1: unary/unary overlaps (skew-hardened shared
-    # machinery) — capu is already the hashed capf form it expects; the
-    # shared full-line census is a superset of capu's hot lines, so the
-    # pair stage skips its own census job (exact for any hot set).
-    ov_uu = capture_overlaps(
-        capu,
-        freq_u,
-        min_overlap=min_support,
-        hot_values=hot_shared,
-        hot_overflow=hot_overflow,
-    )
-    ov_uu = _materialize(ov_uu.coalesce(spark.sparkContext.defaultParallelism), "ov_uu")
-
-    # ONE directional pass over the materialized overlap table builds
-    # BOTH stage-1 classes (1/1 CINDs and proper overlaps, both
-    # directions) behind a single materialization barrier — cind11 and
-    # the proper side were two separate checkpoint jobs over the same
-    # parent (r12; guide §2.4 "share one pass").  ``is_cind`` tags the
-    # class; the class tables are cheap filters of the checkpointed
-    # union.
-    def _dir_rows(dep: str, ref: str) -> DataFrame:
-        return ov_uu.select(
-            F.col(f"{dep}_code").alias("dep_code"),
-            F.col(f"{dep}_v1").alias("dep_v1"),
-            F.col(f"{dep}_v2").alias("dep_v2"),
-            F.col(f"{ref}_code").alias("ref_code"),
-            F.col(f"{ref}_v1").alias("ref_v1"),
-            F.col(f"{ref}_v2").alias("ref_v2"),
-            F.col(f"{dep}_support").alias("support"),
-            (F.col("overlap") == F.col(f"{dep}_support")).alias("is_cind"),
-        )
-
-    partners = _materialize(
-        _dir_rows("a", "b").unionByName(_dir_rows("b", "a")), "partners"
-    )
-    cind11 = partners.filter("is_cind").select(*_CIND_KEY, "support")
-    if ar_filter:
-        from rdfind_spark.operators.rules import (
-            association_rules,
-            filter_ar_implied_cinds,
-        )
-
-        cind11 = _materialize(
-            filter_ar_implied_cinds(
-                cind11, association_rules(triples, min_support, 1.0)
-            ),
-            "cind11",
-        )
-        # the AR filter shrinks the CIND class, so the merge partners
-        # must be rebuilt from the filtered table (reference order:
-        # AR-filtered CINDs no longer generate candidates)
-        partners = cind11.select(*_CIND_KEY).withColumn(
-            "is_cind", F.lit(True)
-        ).unionByName(
-            partners.filter(~F.col("is_cind")).select(*_CIND_KEY).withColumn(
-                "is_cind", F.lit(False)
-            )
-        )
-
-    # ---- stage 2: 1/2 — candidate refs from pairs of 1/1 CINDs with
-    # the same dep (G6), verified exactly.  The ref pool is augmented
-    # with each dep's *own* capture (the reference's "trivial
-    # refinements", ``GenerateUnaryBinaryCindCandidates.scala:12-41``):
-    # the CIND dep ⊆ dep is structurally trivial and never in cind11,
-    # yet refs like (dep-condition ∧ r) — "of my p1-subjects, those are
-    # exactly the ones whose p1-triple also has o=x" — are only
-    # reachable by merging the dep's condition itself with a known ref.
-    refs12 = cind11.select(*_DEP_KEY, "ref_code", "ref_v1").unionByName(
-        cind11.select(*_DEP_KEY)
-        .distinct()
-        .select(
-            *_DEP_KEY,
-            F.col("dep_code").alias("ref_code"),
-            F.col("dep_v1").alias("ref_v1"),
-        )
-    )
-    r1 = refs12.select(
-        *_DEP_KEY, F.col("ref_code").alias("r1_code"), F.col("ref_v1").alias("r1_v1")
-    )
-    r2 = refs12.select(
-        *_DEP_KEY, F.col("ref_code").alias("r2_code"), F.col("ref_v1").alias("r2_v1")
-    )
-    cand12 = (
-        r1.join(r2, on=_DEP_KEY)
-        .filter(_merge_ok(F.col("r1_code"), F.col("r2_code")))
-        .select(
-            *_DEP_KEY,
-            F.col("r1_code").bitwiseOR(F.col("r2_code")).alias("ref_code"),
-            F.col("r1_v1").alias("ref_v1"),
-            F.col("r2_v1").alias("ref_v2"),
-        )
-    )
-    # ---- stage 3 candidates: 2/1 — candidate deps merged from pairs of
-    # directional rows sharing a ref.  ONE merge over partners = 1/1
-    # CINDs ∪ proper overlaps covers both the exact 2/1 candidates
-    # (proper × proper, G7) and the reference's "inferred 2/1s"
-    # (cind11 × partner, G9, which the reference keeps unverified and
-    # uses only to seed 2/2 candidates): the union replaces what were
-    # two quadratic per-ref merge joins with one (measured: 17.9s +
-    # 17.7s → ~21s at sf0.1).  The extra verified rows this admits —
-    # true but non-minimal 2/1s whose dep generalization is a 1/1 CIND —
-    # are exactly the rows ``remove_implied_cinds`` kills (their killer
-    # x ⊆ r is in cind11 by construction of the merge), so the
-    # post-minimality contract is unchanged.
-    freq_bdep = frequent.filter(
-        F.col("code").isin(list(cc.VALID_BINARY_CODES))
-    ).select(
-        F.col("code").alias("dep_code"),
-        F.col("v1").alias("dep_v1"),
-        F.col("v2").alias("dep_v2"),
-    )
-    partners_m = partners.select(*_CIND_KEY, "is_cind")
-    cand21 = _materialize(
-        _merged_dep_candidates(partners_m, partners_m, freq_bdep), "cand:21"
-    )
-
-    # ---- stage 4 candidates: 2/2 — 2/1s sharing a dep (G9/G8).  The
-    # seed is the SUPPORT-PRUNED 2/1 candidate class (exact ∪ inferred),
-    # NOT the verified class (r12; guide §1.2 "remove passes"): a true
-    # 2/2 (dep ⊆ r1∧r2) forces (dep ⊆ r1) and (dep ⊆ r2) both true, and
-    # a true 2/1 always survives the support prunes, so seeding from the
-    # pruned-but-unverified class generates every true 2/2 candidate the
-    # old verified seed did.  The extras — candidates with a false
-    # parent — die in the exact verification; extra TRUE 2/2s admitted
-    # by skipping the old J7 pre-prune are non-minimal by J7's own
-    # criterion and their 1/2 killer is in the verified union (same
-    # argument as the consolidated 2/1 merge above), so
-    # ``remove_implied_cinds`` removes them and the post-minimality
-    # contract is unchanged.  What this buys: the 2/2 class no longer
-    # waits on the 1/2+2/1 verification, so ONE combined evidence join
-    # verifies all three classes (the second _verify_candidates call —
-    # measured 3.7-7.7s of fixed cost for a 4-candidate class at
-    # sf0.1 — and the all21 barrier disappear from the serial chain).
-    all21_seed = _materialize(
-        _support_pruned(cand21.select(*_CIND_KEY).distinct(), freq_h)
-        .select(*_CIND_KEY),
-        "all21_seed",
-    )
-    # Trivial refinements (G8): a 2/2 ref may refine one of the dep's
-    # own unary generalizations (dep_b ⊆ gen(dep_b) is structural, so
-    # no 2/1 row supplies it) — augment the ref pool with each dep's
-    # generalization captures.
-    ident21 = []
-    for bcode, gens in cc.GENERALIZATION_MAP.items():
-        for ucode, value_index in gens:
-            kept = F.col("dep_v1") if value_index == 1 else F.col("dep_v2")
-            ident21.append(
-                all21_seed.select(*_DEP_KEY)
-                .distinct()
-                .filter(F.col("dep_code") == bcode)
-                .select(
-                    *_DEP_KEY,
-                    F.lit(ucode).alias("ref_code"),
-                    kept.alias("ref_v1"),
-                )
-            )
-    refs22 = all21_seed.select(*_DEP_KEY, "ref_code", "ref_v1")
-    for ident in ident21:
-        refs22 = refs22.unionByName(ident)
-    s1 = refs22.select(
-        *_DEP_KEY, F.col("ref_code").alias("r1_code"), F.col("ref_v1").alias("r1_v1")
-    )
-    s2 = refs22.select(
-        *_DEP_KEY, F.col("ref_code").alias("r2_code"), F.col("ref_v1").alias("r2_v1")
-    )
-    cand22 = (
-        s1.join(s2, on=_DEP_KEY)
-        .filter(_merge_ok(F.col("r1_code"), F.col("r2_code")))
-        .select(
-            *_DEP_KEY,
-            F.col("r1_code").bitwiseOR(F.col("r2_code")).alias("ref_code"),
-            F.col("r1_v1").alias("ref_v1"),
-            F.col("r2_v1").alias("ref_v2"),
-        )
-    )
-    hot_masks = _mask_fut.result()
-    _bg.shutdown()
-
-    # ---- ONE combined evidence join for the 1/2 + 2/1 + 2/2 candidate
-    # classes: all three are known before any verification (the 2/2
-    # seed above), and each _verify_candidates call pays fixed costs
-    # (two capf semi-join scans, candidate checkpoint + gate jobs, the
-    # jv co-occurrence shuffle) that dwarf the marginal rows — r11
-    # measured two ~15s calls → one ~13s call when 1/2+2/1 merged; r12
-    # folds 2/2 in as well.  Only ``exact`` 2/1 candidates verify (the
-    # reference verifies proper × proper merges only); the classes are
-    # split back by dep/ref arity, which determines the class uniquely.
-    unary_dep = F.col("dep_code").isin(list(cc.VALID_UNARY_CODES))
-    unary_ref = F.col("ref_code").isin(list(cc.VALID_UNARY_CODES))
-    verified = _materialize(
-        _verify_candidates(
-            capf,
-            capf,
-            cand12.unionByName(cand21.filter("exact").select(*_CIND_KEY))
-            .unionByName(cand22),
-            "12+21+22",
-            hot_shared,
-            hot_masks=hot_masks,
-            supports=freq_h,
-            hot_overflow=hot_overflow,
-        ),
-        "cind12_21_22",
-    )
-    cind12 = verified.filter(unary_dep)
-    cind21 = verified.filter(~unary_dep & unary_ref)
-    cind22 = verified.filter(~unary_dep & ~unary_ref)
-
-    # ---- union + minimality (shared with the all-at-once engine)
-    out = (
-        cind11.unionByName(cind12)
-        .unionByName(cind21)
-        .unionByName(cind22)
-        .filter(~structural_implies())
-    )
-    minimal = remove_implied_cinds(out)
-    dcap_h.unpersist()
-    capf.unpersist()
-    freq_h.unpersist()
-    frequent.unpersist()
-    return minimal
+    cinds = discover_cinds(triples, min_support, minimal=False, projection=projection)
+    rules = association_rules(triples, min_support, 1.0)
+    return remove_implied_cinds(filter_ar_implied_descendants(cinds, rules))

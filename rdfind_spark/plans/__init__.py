@@ -7,6 +7,10 @@ and subclasses), mapping each strategy id to its Spark implementation:
 ====  ==============================  =========================================
  0    AllAtOnceTraversalStrategy      ``operators.cind.discover_cinds``
  1    SmallToLargeTraversalStrategy   ``operators.staged.discover_cinds_staged``
+                                      = ``discover_cinds(minimal=True)``;
+                                      under the AR filter it keeps the
+                                      reference's stage order (AR-implied
+                                      1/1 CINDs seed no larger CIND)
  2    ApproximateAllAtOnce...         ``discover_cinds(sketch_filter=True)``
  3    LateBBTraversalStrategy         ``discover_cinds(sketch_filter=True)`` —
                                       LateBB is the approximate family's
@@ -20,8 +24,9 @@ and subclasses), mapping each strategy id to its Spark implementation:
                                       sketch-prefilter path like strategy 2
 ====  ==============================  =========================================
 
-All strategies return the identical exact CIND set (cross-checked by the
-driver oracle and the property tests in ``tests/test_cind_engine.py``).
+Without the AR filter all strategies return the identical exact CIND set
+(cross-checked by the driver oracle and the property tests in
+``tests/test_cind_engine.py``).
 """
 
 from __future__ import annotations
@@ -55,8 +60,8 @@ def traversal(
         )
     if strategy == 1:
         if not minimal:
-            # The staged lattice traversal prunes non-minimal CINDs as it
-            # climbs (that IS the strategy); it cannot emit the full set.
+            # The reference's lattice traversal prunes non-minimal CINDs
+            # as it climbs, so strategy 1 only has the minimal set.
             warnings.warn(
                 "traversal strategy 1 (small-to-large) always returns the "
                 "minimal CIND set; minimal=False is ignored — use strategy "

@@ -82,7 +82,7 @@ def cind_minimal_ar(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("cind_small_to_large", oracle.cind_sql(MIN_SUPPORT, minimal=True))
 def cind_small_to_large(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Staged SmallToLarge traversal (the reference's default strategy);
+    """Traversal strategy 1, SmallToLarge (the reference's default);
     same oracle as cind_minimal — the driver's check doubles as the
     cross-strategy agreement test (SURVEY §5)."""
     from rdfind_spark.operators.staged import discover_cinds_staged

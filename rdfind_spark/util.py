@@ -80,8 +80,8 @@ def null_sensitive_cmp(a, b) -> int:
 
 def materialize(df, eager: bool = True):
     """Cut lineage and pin ``df``'s current result — the engine's one
-    stage-materialization primitive (iterative loops, staged lattices,
-    reused sketch tables all go through here).
+    stage-materialization primitive (iterative loops, the minimality
+    pass, reused sketch tables all go through here).
 
     Default mode is ``localCheckpoint``: blocks live in executor-local
     storage, no reliable-store round-trip, fastest — but NOT

@@ -7,8 +7,8 @@ Usage: python scripts/scale_probe.py
        [--staged|--dedup|--ann|--triangles|--cosine] [N ...]
 (default N: 1 2 4)
 
-``--staged`` probes the SmallToLarge staged lattice
-(``discover_cinds_staged``) instead of the all-at-once engine.
+``--staged`` probes the traversal-strategy-1 entry
+(``discover_cinds_staged``) instead of ``discover_cinds``.
 ``--dedup`` probes the exact n-gram-Jaccard near-dup pipeline
 (inverted shingle index + candidate-restricted verification) on N×
 copies of the documents table, every TOKEN prefixed per copy so

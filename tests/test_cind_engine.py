@@ -52,29 +52,33 @@ def brute_cinds(triples, min_support, minimal=True):
                 continue  # trivial
             if dset <= rset:
                 out.add((*dep, *ref, len(dset)))
-    if minimal:
-        def killed(c):
-            dep, ref = c[0:3], c[3:6]
-            for k in out:
-                kdep, kref = k[0:3], k[3:6]
-                if k == c:
-                    continue
-                # broader dependent with same ref
-                if kref == ref and any(
-                    kdep == (g, (dep[1] if i == 1 else dep[2]), "")
-                    for g, i in cc.generalizations(dep[0])
-                ):
-                    return True
-                # narrower referenced with same dep
-                if kdep == dep and any(
-                    ref == (g, (kref[1] if i == 1 else kref[2]), "")
-                    for g, i in cc.generalizations(kref[0])
-                ):
-                    return True
-            return False
+    return brute_minimal(out) if minimal else out
 
-        out = {c for c in out if not killed(c)}
-    return out
+
+def brute_minimal(cinds):
+    """The CINDs of ``cinds`` that no other member implies."""
+
+    def killed(c):
+        dep, ref = c[0:3], c[3:6]
+        for k in cinds:
+            kdep, kref = k[0:3], k[3:6]
+            if k == c:
+                continue
+            # broader dependent with same ref
+            if kref == ref and any(
+                kdep == (g, (dep[1] if i == 1 else dep[2]), "")
+                for g, i in cc.generalizations(dep[0])
+            ):
+                return True
+            # narrower referenced with same dep
+            if kdep == dep and any(
+                ref == (g, (kref[1] if i == 1 else kref[2]), "")
+                for g, i in cc.generalizations(kref[0])
+            ):
+                return True
+        return False
+
+    return {c for c in cinds if not killed(c)}
 
 
 def spark_cinds(spark, triples, min_support, minimal=True):
